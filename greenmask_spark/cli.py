@@ -325,29 +325,17 @@ def cmd_dump(args) -> int:
               file=sys.stderr)
         return 2
     common = cfg.get("common", {})
+    # copy: COPY text + gzip per table, the reference's native format
     fmt = cfg.get("dump", {}).get("format", "parquet")
-    if fmt == "copy":
-        # COPY text + gzip per table (the reference's native format) +
-        # the same manifest
-        from greenmask_spark.sources.copy_format import write_copy
-        from greenmask_spark.sources.manifest import build_manifest, write_manifest
-
-        os.makedirs(out, exist_ok=True)
-        for name, df in tables.items():
-            write_copy(df, os.path.join(out, name))
-        manifest = build_manifest(
-            tables, graph=graph, primary_keys=pks, sequences=seqs,
-            salt=common.get("salt", ""), seed=common.get("seed"),
-            transformations=[{"table": p.table} for p in plans],
-            data_format="copy",
-        )
-        write_manifest(manifest, out)
-    else:
-        write_dump(
-            tables, out, graph=graph, primary_keys=pks, sequences=seqs,
-            salt=common.get("salt", ""), seed=common.get("seed"),
-            transformations=[{"table": p.table} for p in plans],
-        )
+    if fmt not in ("parquet", "copy"):
+        print(f"dump: format must be parquet or copy, not {fmt!r}",
+              file=sys.stderr)
+        return 2
+    write_dump(
+        tables, out, graph=graph, primary_keys=pks, sequences=seqs,
+        salt=common.get("salt", ""), seed=common.get("seed"),
+        transformations=[{"table": p.table} for p in plans], fmt=fmt,
+    )
     print(json.dumps({"dumped": sorted(tables), "output": out, "format": fmt}))
     return 0
 

@@ -2,8 +2,10 @@
 
 The reference parallelizes with a worker pool over whole tables
 (internal/db/postgres/cmd/dump.go:253-268) and has no intra-table
-parallelism; here Spark owns all parallelism and we tune the session for
-the shuffle/AQE behavior we want at cluster scale.
+parallelism. Here Spark owns intra-table parallelism, and
+``sources.io.write_dump`` overlaps the writes of up to two tables
+(``DUMP_WRITERS``); we tune the session for the shuffle/AQE behavior we
+want at cluster scale.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -128,6 +129,114 @@ def test_read_dump_skips_absent_tables(spark, tables):
         shutil.rmtree(os.path.join(out, "orders"))
         back = read_dump(spark, out)
         assert set(back) == {"customer"}
+
+
+_DUMP_TABLES = ("region", "nation", "customer", "supplier", "part",
+                "orders")
+
+
+def test_write_dump_concurrent_equals_sources_and_sequential(
+        spark, tables, tmp_path, monkeypatch):
+    """Six tables written two at a time: every table reads back equal to
+    its source frame, and the manifest is the one a one-at-a-time write
+    produces (created_at aside)."""
+    import json
+
+    from greenmask_spark.sources import io
+    from greenmask_spark.subset import FKGraph, Reference
+
+    src = {t: tables[t] for t in _DUMP_TABLES}
+    kw = dict(
+        graph=FKGraph(tables=list(_DUMP_TABLES), references=[
+            Reference("nation", "region", ("n_regionkey",), ("r_regionkey",)),
+            Reference("customer", "nation", ("c_nationkey",),
+                      ("n_nationkey",)),
+            Reference("orders", "customer", ("o_custkey",), ("c_custkey",)),
+        ]),
+        primary_keys={"orders": ["o_orderkey"]},
+        sequences={"orders": "o_orderkey"}, salt="s7", seed=7,
+    )
+    concurrent = io.write_dump(src, str(tmp_path / "pool"), **kw)
+    for t, df in src.items():
+        back = spark.read.parquet(str(tmp_path / "pool" / t))
+        assert back.exceptAll(df).count() == 0, t
+        assert df.exceptAll(back).count() == 0, t
+
+    monkeypatch.setattr(io, "DUMP_WRITERS", 1)
+    sequential = io.write_dump(src, str(tmp_path / "seq"), **kw)
+
+    def without_created_at(m):
+        d = json.loads(m.to_json())
+        d.pop("created_at")
+        return d
+
+    assert without_created_at(concurrent) == without_created_at(sequential)
+    assert [t.name for t in concurrent.tables] == list(_DUMP_TABLES)
+
+
+def test_write_dump_caps_writes_in_flight(spark, tables, tmp_path,
+                                          monkeypatch):
+    """At most DUMP_WRITERS (2) saves run at once, two do overlap, and
+    each save runs with its own copy of the caller's Spark local
+    properties: it starts outside any SQL execution, and what one save
+    sets is not seen by the save running beside it."""
+    import threading
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from greenmask_spark.sources import io
+
+    sc = spark.sparkContext
+    lock = threading.Lock()
+    state = {"now": 0, "peak": 0, "seen": []}
+    orig_save = DataFrameWriter.save
+
+    def counting_save(self, path, *a, **kw):
+        me = os.path.basename(path)
+        with lock:
+            state["now"] += 1
+            state["peak"] = max(state["peak"], state["now"])
+        on_entry = (sc.getLocalProperty("greenmask.dump.test"),
+                    sc.getLocalProperty("spark.sql.execution.id"))
+        sc.setLocalProperty("greenmask.dump.test.owner", me)
+        try:
+            time.sleep(0.3)  # long enough that a second write starts
+            owner = sc.getLocalProperty("greenmask.dump.test.owner")
+            with lock:
+                state["seen"].append((me, *on_entry, owner))
+            return orig_save(self, path, *a, **kw)
+        finally:
+            with lock:
+                state["now"] -= 1
+
+    monkeypatch.setattr(DataFrameWriter, "save", counting_save)
+    sc.setLocalProperty("greenmask.dump.test", "caller")
+    try:
+        io.write_dump({t: tables[t] for t in _DUMP_TABLES},
+                      str(tmp_path / "d"))
+    finally:
+        sc.setLocalProperty("greenmask.dump.test", None)
+    assert io.DUMP_WRITERS == 2
+    assert state["peak"] == 2
+    assert sorted(state["seen"]) == sorted(
+        (t, "caller", None, t) for t in _DUMP_TABLES)
+    assert sc.getLocalProperty("greenmask.dump.test.owner") is None
+
+
+def test_write_dump_failure_raises_and_writes_no_manifest(spark, tables,
+                                                          tmp_path):
+    """A table whose write fails makes write_dump raise that error, and
+    the dump gets no _manifest.json."""
+    from greenmask_spark.sources.io import write_dump
+
+    src = {t: tables[t] for t in _DUMP_TABLES}
+    src["nation"] = src["nation"].withColumn(
+        "boom", F.raise_error(F.lit("write_dump test failure")))
+    out = tmp_path / "failed"
+    with pytest.raises(Exception, match="write_dump test failure"):
+        write_dump(src, str(out))
+    assert not (out / "_manifest.json").exists()
 
 
 def test_masked_streaming_pipeline(spark, sf_dir, tmp_path):
